@@ -20,10 +20,13 @@ tests generated from the reference's own DFA tables
 
 from __future__ import annotations
 
+import logging
 import sys
 import unicodedata
 
 import numpy as np
+
+log = logging.getLogger(__name__)
 
 # --- word-break classes ----------------------------------------------------
 OTHER = 0
@@ -97,24 +100,37 @@ def _classify(cp: int) -> int:
     return OTHER
 
 
+def _table_key() -> str:
+    """Hash of what the class table is computed from: this module's
+    source (class constants, code point sets, _classify, class_table)
+    and the Unicode database behind unicodedata.  Any change names a
+    new temp file, so a stale table is never loaded."""
+    import hashlib
+    import inspect
+
+    src = inspect.getsource(sys.modules[__name__]) + unicodedata.unidata_version
+    return hashlib.sha256(src.encode()).hexdigest()[:16]
+
+
 def class_table() -> np.ndarray:
     """uint8 lookup table codepoint -> word-break class, built once per
     machine (BMP exact; supplementary planes via coarse ranges).  The
     65k unicodedata classifications cost ~1.5s, so the table is cached
-    to a shared temp file: each executor python worker loads it in ms
-    instead of rebuilding it."""
+    to a shared temp file, keyed on _table_key(): each executor python
+    worker loads it in ms instead of rebuilding it."""
     global _TABLE
     if _TABLE is None:
         import os
         import tempfile
 
-        cache = os.path.join(tempfile.gettempdir(), "golucene_wb_table_v1.npy")
+        cache = os.path.join(tempfile.gettempdir(),
+                             f"golucene_wb_table_{_table_key()}.npy")
         if os.path.exists(cache):
             try:
                 _TABLE = np.load(cache)
                 return _TABLE
             except Exception:
-                pass
+                log.warning("rebuilding unreadable %s", cache, exc_info=True)
         t = np.zeros(0x110000, dtype=np.uint8)
         for cp in range(0x10000):
             t[cp] = _classify(cp)
@@ -127,7 +143,7 @@ def class_table() -> np.ndarray:
                 np.save(f, t)
             os.replace(tmp, cache)
         except Exception:
-            pass
+            log.warning("could not save %s", cache, exc_info=True)
     return _TABLE
 
 

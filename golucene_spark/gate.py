@@ -61,7 +61,7 @@ def _index(spark: SparkSession, sf_dir: str) -> LogicalIndex:
         CorpusSpec.documents(),
         analyzer="simple",
         quantize_norms=False,
-    ).cache()
+    ).persist()
 
 
 def _topk_e6(searcher: Searcher, query_str: str, k: int = 10) -> DataFrame:
@@ -4693,7 +4693,7 @@ def q_token_length_cap(spark, sf_dir):
         "lang", "source", "n_chars",
     )
     ix = LogicalIndex(docs, CorpusSpec.documents(), analyzer="standard",
-                      quantize_norms=False).cache()
+                      quantize_norms=False).persist()
     return (
         ix.term_stats("text", [t255, t256])
         .select("term", F.col("df").cast("long"), F.col("ttf").cast("long"))

@@ -49,6 +49,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 from ..analysis import get_analyzer
+from ..search.cache import SnapshotCache
 from . import smallfloat
 
 BLOCK_SIZE = 128  # core/codec/lucene41/postingsFormat.go:22
@@ -1016,7 +1017,7 @@ class LogicalIndex:
         self.spark = docs.sparkSession
         self.spec = spec
         self.quantized = quantize_norms
-        self._cstats: dict[str, dict] = {}
+        self.cache = SnapshotCache()
         docs = assign_doc_ids(docs, spec, num_segments)
         self._tf_all = tokenize_tf(docs, spec, analyzer, quantize_norms,
                                    index_positions=index_positions)
@@ -1048,30 +1049,32 @@ class LogicalIndex:
             .agg(F.count("*").alias("df"), F.sum("freq").alias("ttf"))
         )
 
-    def cache(self):
+    def persist(self):
         self._tf_all = self._tf_all.persist()
         return self
 
     def collection_stats_row(self, field: str) -> dict:
-        """Memoized (max_doc, doc_count, sum_ttf) for the field."""
-        if field not in self._cstats:
-            r = (
-                self.doc_stats.agg(
-                    F.countDistinct("doc_id").alias("max_doc"),
-                    F.sum(F.when(F.col("field") == field, 1).otherwise(0)).alias("doc_count"),
-                    F.sum(F.when(F.col("field") == field, F.col("length"))).alias("sum_ttf"),
-                ).collect()
-            )[0]
-            omit = any(
-                f.name == field and getattr(f, "omit_norms", False)
-                for f in self.spec.text_fields
-            )
-            self._cstats[field] = {
-                "max_doc": int(r["max_doc"]),
-                "doc_count": int(r["doc_count"] or 0),
-                "sum_ttf": 0 if omit else int(r["sum_ttf"] or 0),
-            }
-        return self._cstats[field]
+        """(max_doc, doc_count, sum_ttf) for the field, cached."""
+        return self.cache.get_or_compute(
+            ("cstats", field), lambda: self._collection_stats_row(field))
+
+    def _collection_stats_row(self, field: str) -> dict:
+        r = (
+            self.doc_stats.agg(
+                F.countDistinct("doc_id").alias("max_doc"),
+                F.sum(F.when(F.col("field") == field, 1).otherwise(0)).alias("doc_count"),
+                F.sum(F.when(F.col("field") == field, F.col("length"))).alias("sum_ttf"),
+            ).collect()
+        )[0]
+        omit = any(
+            f.name == field and getattr(f, "omit_norms", False)
+            for f in self.spec.text_fields
+        )
+        return {
+            "max_doc": int(r["max_doc"]),
+            "doc_count": int(r["doc_count"] or 0),
+            "sum_ttf": 0 if omit else int(r["sum_ttf"] or 0),
+        }
 
 
 def dead_segments(index_dir: str) -> set[int]:
@@ -1103,6 +1106,7 @@ class MaterializedIndex:
     def __init__(self, spark: SparkSession, index_dir: str):
         self.spark = spark
         self.index_dir = index_dir
+        self.cache = SnapshotCache()
         # mergeSchema: mixed old/new chunks (e.g. pre-/post-WAND-metadata,
         # merge outputs) must resolve to the UNION schema deterministically,
         # not to whichever file Spark happens to sample first.

@@ -13,6 +13,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..search.cache import SnapshotCache
+
 # default docBase stride: far above SEGMENT_STRIDE * num_segments of
 # any single index, so shifted ids never collide (doc_id is int64)
 DOC_BASE_STRIDE = 1 << 50
@@ -29,7 +31,7 @@ class MultiIndex:
         quant = {getattr(ix, "quantized", True) for ix in indexes}
         assert len(quant) == 1, "sub-indexes disagree on norm quantization"
         self.quantized = quant.pop()
-        self._cstats: dict[str, dict] = {}
+        self.cache = SnapshotCache()
 
     def doc_base(self, i: int) -> int:
         return i * self.stride
@@ -63,19 +65,17 @@ class MultiIndex:
         return u.groupBy("term").agg(F.sum("df").alias("df"), F.sum("ttf").alias("ttf"))
 
     def collection_stats_row(self, field: str) -> dict:
-        if field not in self._cstats:
-            max_doc = doc_count = sum_ttf = 0
-            for ix in self.indexes:
-                if hasattr(ix, "collection_stats_row"):
-                    r = ix.collection_stats_row(field)
-                    max_doc += int(r["max_doc"])
-                    doc_count += int(r.get("doc_count") or 0)
-                    sum_ttf += int(r["sum_ttf"] or 0)
-            self._cstats[field] = {
-                "field": field, "max_doc": max_doc,
-                "doc_count": doc_count, "sum_ttf": sum_ttf,
-            }
-        return self._cstats[field]
+        return self.cache.get_or_compute(
+            ("cstats", field), lambda: self._collection_stats_row(field))
+
+    def _collection_stats_row(self, field: str) -> dict:
+        rows = [ix.collection_stats_row(field) for ix in self.indexes]
+        return {
+            "field": field,
+            "max_doc": sum(int(r["max_doc"]) for r in rows),
+            "doc_count": sum(int(r.get("doc_count") or 0) for r in rows),
+            "sum_ttf": sum(int(r["sum_ttf"] or 0) for r in rows),
+        }
 
     @property
     def doc_stats(self) -> DataFrame:

@@ -1,64 +1,98 @@
-"""Query caching: an LRU of persisted score frames (the Lucene core
-LRUQueryCache role — it caches per-segment DocIdSets; here the cached
-unit is the scored match frame, which Spark can hold distributed and
-columnar via persist()).
+"""One cache class, ``SnapshotCache``: an LRU capped by entry count that
+counts hits, misses and evictions and calls ``on_evict`` on each value
+it drops.
 
-A CachingSearcher wraps a Searcher: the first execution of a query
-persists its score frame; repeated executions (same AST, same
-similarity) reuse the cached distributed dataset — top-k, totalHits,
-facets and grouping all re-derive from it without re-scanning
-postings.  Eviction is LRU with a bounded entry count; evicted frames
-are unpersisted (blocking=False) so executor storage is reclaimed.
-
-Scale note: cache entries live in executor storage memory
-(MEMORY_AND_DISK), not on the driver; cache() is per-session, exactly
-like Lucene's per-IndexSearcher cache.
+Each index snapshot (LogicalIndex, MaterializedIndex, MultiIndex) owns
+one as ``index.cache`` (cap SNAPSHOT_CACHE_ENTRIES) holding term and
+collection stats, multi-term expansions and prepared score/top-k plans
+under tagged keys.  Every Searcher over the snapshot shares them,
+distinct queries cannot grow driver memory past the cap, and a mutation
+opens a new snapshot with an empty cache.  CachingSearcher (Lucene's
+LRUQueryCache role) keeps persisted score frames in another, so repeats
+skip the postings scan; evicted frames are unpersisted.
 """
 
 from __future__ import annotations
 
 from collections import OrderedDict
 
-from pyspark.sql import DataFrame
 from pyspark import StorageLevel
+from pyspark.sql import DataFrame
+
+from .parser import parse_query
+
+# A prepared plan retains ~0.4 MB of driver heap (sf0.01, 2-term OR), so
+# a full cache holds ~210 MB; the benchmark workloads never evict.
+SNAPSHOT_CACHE_ENTRIES = 512
+
+_FRAME_STORAGE = StorageLevel.MEMORY_AND_DISK  # CachingSearcher frames
+_MISSING = object()
 
 
-def _query_key(q) -> str:
-    # AST dataclasses are frozen/hashable with value equality; repr is
-    # deterministic and includes boosts/slops/occurs
-    return repr(q)
+class SnapshotCache:
+    """LRU map capped at ``max_entries``; ``on_evict(value)`` runs for
+    every value it drops, by eviction or by ``clear()``."""
+
+    def __init__(self, max_entries: int = SNAPSHOT_CACHE_ENTRIES,
+                 on_evict=None):
+        self.max_entries = max_entries
+        self.on_evict = on_evict or (lambda value: None)
+        self._d: OrderedDict = OrderedDict()
+        self.hits = self.misses = self.evictions = 0
+
+    def __len__(self) -> int:
+        return len(self._d)
+
+    def get(self, key, default=None):
+        """The cached value (a hit), or ``default`` (a miss)."""
+        if key not in self._d:
+            self.misses += 1
+            return default
+        self.hits += 1
+        self._d.move_to_end(key)
+        return self._d[key]
+
+    def put(self, key, value) -> None:
+        self._d[key] = value
+        self._d.move_to_end(key)
+        while len(self._d) > self.max_entries:
+            self.evictions += 1
+            self.on_evict(self._d.popitem(last=False)[1])
+
+    def get_or_compute(self, key, compute):
+        value = self.get(key, _MISSING)
+        if value is _MISSING:
+            value = compute()
+            self.put(key, value)
+        return value
+
+    def clear(self) -> None:
+        while self._d:
+            self.on_evict(self._d.popitem()[1])
 
 
 class CachingSearcher:
     """Decorator over Searcher adding an LRU score-frame cache."""
 
-    def __init__(self, searcher, max_entries: int = 32,
-                 storage_level: StorageLevel = StorageLevel.MEMORY_AND_DISK):
+    def __init__(self, searcher, max_entries: int = 32):
         self.searcher = searcher
-        self.max_entries = max_entries
-        self.storage_level = storage_level
-        self._cache: OrderedDict[str, DataFrame] = OrderedDict()
-        self.hits = 0
-        self.misses = 0
+        self._cache = SnapshotCache(
+            max_entries, on_evict=lambda f: f.unpersist(blocking=False))
+
+    max_entries = property(lambda self: self._cache.max_entries)
+    hits = property(lambda self: self._cache.hits)
+    misses = property(lambda self: self._cache.misses)
 
     # -- cached core ------------------------------------------------------
     def score_frame(self, query) -> DataFrame:
         if isinstance(query, str):
-            from .parser import parse_query
-
             query = parse_query(query)
-        key = (self.searcher.sim.name, _query_key(query))
-        if key in self._cache:
-            self.hits += 1
-            self._cache.move_to_end(key)
-            return self._cache[key]
-        self.misses += 1
-        frame = self.searcher.score_frame(query).persist(self.storage_level)
-        self._cache[key] = frame
-        while len(self._cache) > self.max_entries:
-            _, evicted = self._cache.popitem(last=False)
-            evicted.unpersist(blocking=False)
-        return frame
+        # repr of the frozen AST is deterministic and includes
+        # boosts/slops/occurs
+        return self._cache.get_or_compute(
+            (self.searcher.sim.name, repr(query)),
+            lambda: self.searcher.score_frame(query).persist(_FRAME_STORAGE),
+        )
 
     def search(self, query, k: int = 10) -> DataFrame:
         # collects through executor.collect_topk — ONE collector order
@@ -85,8 +119,6 @@ class CachingSearcher:
         return collect_topk(self.score_frame(query), k, after=after)
 
     def clear(self):
-        for f in self._cache.values():
-            f.unpersist(blocking=False)
         self._cache.clear()
 
     # everything else (explain, search_sorted, index, sim, ...) passes

@@ -40,6 +40,9 @@ from .ast import (
     TermRangeQuery,
     WildcardQuery,
 )
+from .multiterm import (expand_fuzzy, expand_regexp, expand_term_range,
+                        expand_wildcard)
+from .parser import parse_query
 from .similarity import get_similarity
 
 RESULT_SCHEMA = T.StructType(
@@ -153,32 +156,13 @@ class Searcher:
     def __init__(self, index, similarity: str = "bm25"):
         self.index = index
         self.sim = get_similarity(similarity) if isinstance(similarity, str) else similarity
-        # stats are properties of the index SNAPSHOT (df/ttf never change
-        # under one open index — deletes don't decrement df until merge,
-        # exactly the reference's semantics), so the memo lives ON the
-        # index object and is shared by every Searcher over it: a fresh
-        # Searcher per query — the normal serving pattern — pays the
-        # term_dict collect only for terms the index hasn't seen yet.
-        self._cstats_cache = getattr(index, "_cstats_shared", None)
-        if self._cstats_cache is None:
-            self._cstats_cache = index._cstats_shared = {}
-        self._tstats_cache = getattr(index, "_tstats_shared", None)
-        if self._tstats_cache is None:
-            self._tstats_cache = index._tstats_shared = {}
-        # prepared-plan memo (same snapshot-lifetime rule as the stats
-        # memos): building a top-k DataFrame costs 0.1-0.2s of pure
-        # driver-side plan construction (measured, BENCH/
-        # decompose_r6_before.json "plan_build") — for a repeated query
-        # the LOGICAL PLAN is identical, so reuse the immutable
-        # DataFrame.  Nothing is precomputed: every collect() on the
-        # memoized frame re-executes from the index tables.
-        self._plan_cache = getattr(index, "_plan_shared", None)
-        if self._plan_cache is None:
-            self._plan_cache = index._plan_shared = {}
 
-    def _plan_key(self, kind, query, *extra):
-        """Hashable memo key for a prepared plan, or None when any part
-        is unhashable (custom similarity state, exotic query objects)."""
+    def _cached_plan(self, build, kind, query, *extra) -> DataFrame:
+        """``build()`` a prepared plan, kept in index.cache: a repeated
+        query reuses the immutable DataFrame instead of paying 0.1-0.2s
+        of driver-side plan construction; every collect still executes.
+        Plans whose key is unhashable (custom similarity state, exotic
+        query objects) are built uncached."""
         try:
             sim_state = tuple(
                 (n, v) for n, v in sorted(vars(self.sim).items())
@@ -186,47 +170,40 @@ class Searcher:
             )
             key = (kind, type(self.sim).__name__, sim_state, query, *extra)
             hash(key)
-            return key
         except TypeError:
-            return None
+            return build()
+        return self.index.cache.get_or_compute(key, build)
 
     # -- statistics ------------------------------------------------------
     def _collection_stats(self, field: str) -> dict:
-        if field not in self._cstats_cache:
-            if hasattr(self.index, "collection_stats_row"):
-                row = self.index.collection_stats_row(field)
-                self._cstats_cache[field] = {
-                    "max_doc": int(row["max_doc"]),
-                    "sum_ttf": int(row["sum_ttf"] or 0),
-                }
-            else:
-                r = self.index.collection_stats(field).collect()[0]
-                self._cstats_cache[field] = {
-                    "max_doc": int(r["max_doc"]),
-                    "sum_ttf": int(r["sum_ttf"] or 0),
-                }
-        return self._cstats_cache[field]
+        row = self.index.collection_stats_row(field)
+        return {"max_doc": int(row["max_doc"]), "sum_ttf": int(row["sum_ttf"] or 0)}
 
     def _term_stats(self, query) -> dict[tuple, _TermStats]:
-        # memoized per searcher: a Searcher wraps one index snapshot, so
-        # (field, term) stats never change under it.  Repeated queries
-        # (and wand_topk's early-out falling back to search()) pay the
-        # term_dict collect once instead of once per execution.
-        terms = _collect_terms(query, set())
-        missing = [(f, t) for f, t in terms if (f, t) not in self._tstats_cache]
+        # stats never change under one snapshot (deletes don't decrement
+        # df until merge), so index.cache shares them across Searchers.
+        # The result comes from what was just fetched, never a cache
+        # re-read: a large expansion may overflow the cap.
+        cache = self.index.cache
+        out: dict[tuple, _TermStats] = {}
         by_field: dict[str, list[str]] = {}
-        for f, t in missing:
-            by_field.setdefault(f, []).append(t)
-            self._tstats_cache[(f, t)] = _TermStats()
+        for f, t in _collect_terms(query, set()):
+            st = cache.get(("term", f, t))
+            if st is None:
+                by_field.setdefault(f, []).append(t)
+                st = _TermStats()
+            out[(f, t)] = st
         for f, ts in by_field.items():
             for r in self.index.term_stats(f, ts).collect():
                 d = r.asDict()
-                self._tstats_cache[(f, r["term"])] = _TermStats(
+                out[(f, r["term"])] = _TermStats(
                     int(r["df"]), int(r["ttf"]),
                     d.get("bmf_min"), d.get("bmf_max"),
                     d.get("bdlq_min"), d.get("bdlq_max"),
                 )
-        return {(f, t): self._tstats_cache[(f, t)] for f, t in terms}
+            for t in ts:
+                cache.put(("term", f, t), out[(f, t)])
+        return out
 
     def _term_scalar(self, st, cs) -> float:
         """Per-term scoring scalar: idf for BM25/classic, the Dirichlet
@@ -416,49 +393,31 @@ class Searcher:
             )
         raise TypeError(f"unsupported query {type(q)}")
 
-    def _expand_memo(self, key, fn):
-        """Multi-term expansions scan the term dictionary; like term
-        stats, the matched-term set is a property of the index SNAPSHOT,
-        so the memo lives on the index object and repeated fuzzy/
-        wildcard/regexp/range searches skip the dictionary job."""
-        memo = getattr(self.index, "_expand_shared", None)
-        if memo is None:
-            memo = self.index._expand_shared = {}
-        if key not in memo:
-            memo[key] = fn()
-        return memo[key]
-
     def _resolve(self, q):
         """Expand deferred multi-term nodes against the index (the
-        Query.Rewrite fixpoint of search.go:173-181 for wildcard)."""
+        Query.Rewrite fixpoint of search.go:173-181 for wildcard).  Each
+        expansion is a term-dictionary job, so index.cache keeps it."""
+        expand = self.index.cache.get_or_compute
         if isinstance(q, WildcardQuery):
-            from .multiterm import expand_wildcard
-
-            return self._expand_memo(
-                ("w", q.field, q.pattern, q.boost),
+            return expand(
+                ("expand", "w", q.field, q.pattern, q.boost),
                 lambda: expand_wildcard(self.index, q.field, q.pattern, q.boost),
             )
         if isinstance(q, FuzzyQuery):
-            from .multiterm import expand_fuzzy
-
             pl = getattr(q, "prefix_length", 0)
-            return self._expand_memo(
-                ("f", q.field, q.term, q.max_edits, q.boost, pl),
+            return expand(
+                ("expand", "f", q.field, q.term, q.max_edits, q.boost, pl),
                 lambda: expand_fuzzy(self.index, q.field, q.term, q.max_edits,
                                      q.boost, prefix_length=pl),
             )
         if isinstance(q, RegexpQuery):
-            from .multiterm import expand_regexp
-
-            return self._expand_memo(
-                ("r", q.field, q.regex, q.boost),
+            return expand(
+                ("expand", "r", q.field, q.regex, q.boost),
                 lambda: expand_regexp(self.index, q.field, q.regex, q.boost),
             )
         if isinstance(q, TermRangeQuery):
-            from .multiterm import expand_term_range
-
-            return self._expand_memo(
-                ("tr", q.field, q.lower, q.upper, q.include_lower,
+            return expand(
+                ("expand", "tr", q.field, q.lower, q.upper, q.include_lower,
                  q.include_upper, q.boost),
                 lambda: expand_term_range(
                     self.index, q.field, q.lower, q.upper,
@@ -756,21 +715,17 @@ class Searcher:
     # -- entry points ------------------------------------------------------
     def score_frame(self, query) -> DataFrame:
         """Full (doc_id, score) frame for a query (no top-k)."""
-        key = self._plan_key("score", query)
-        if key is not None and key in self._plan_cache:
-            return self._plan_cache[key]
+        return self._cached_plan(lambda: self._score_frame(query), "score", query)
+
+    def _score_frame(self, query) -> DataFrame:
         q = self._resolve(query.rewrite())
         q = q.rewrite() if hasattr(q, "rewrite") else q
         stats = self._term_stats(q)
         qn = self.sim.query_norm(self._sum_sq(q, stats))
         f = self._frame(q, stats, qn)
         if f is None:
-            out = empty_results(self.index.spark)
-        else:
-            out = f.select(F.col("doc_id").cast("long"), F.col("score").cast("double"))
-        if key is not None:
-            self._plan_cache[key] = out
-        return out
+            return empty_results(self.index.spark)
+        return f.select(F.col("doc_id").cast("long"), F.col("score").cast("double"))
 
     def explain(self, query, doc_id: int) -> dict:
         """Score decomposition for one doc (Q13, search.go:129-152 /
@@ -999,16 +954,9 @@ class Searcher:
         doc_id identically on both sides of the page boundary (ADVICE
         r4: raw-float page 1 vs e6 page 2 could skip/duplicate a hit)."""
         if isinstance(query, str):
-            from .parser import parse_query
-
             query = parse_query(query)
-        key = self._plan_key("topk", query, k)
-        if key is not None and key in self._plan_cache:
-            return self._plan_cache[key]
-        out = collect_topk(self.score_frame(query), k)
-        if key is not None:
-            self._plan_cache[key] = out
-        return out
+        return self._cached_plan(
+            lambda: collect_topk(self.score_frame(query), k), "topk", query, k)
 
     def search_with_total(self, query, k: int = 10,
                           hydrate: bool = False) -> tuple[int, DataFrame]:
@@ -1017,8 +965,6 @@ class Searcher:
         with the index's stored doc_meta columns (the stored-field
         visitor role, document.go:75) when the index materializes one."""
         if isinstance(query, str):
-            from .parser import parse_query
-
             query = parse_query(query)
         frame = self.score_frame(query)
         total = frame.count()
@@ -1036,8 +982,6 @@ class Searcher:
         TotalHitCountCollector (collect.go:53-57's totalHits alone);
         Catalyst prunes the score expression under the count."""
         if isinstance(query, str):
-            from .parser import parse_query
-
             query = parse_query(query)
         return self.score_frame(query).select("doc_id").count()
 
@@ -1062,8 +1006,6 @@ class Searcher:
         page boundaries neither skip nor duplicate hits — no persisted
         frame needed (raw float equality here was ADVICE r2/r3)."""
         if isinstance(query, str):
-            from .parser import parse_query
-
             query = parse_query(query)
         return collect_topk(self.score_frame(query), k, after=after)
 
@@ -1077,8 +1019,6 @@ class Searcher:
         columnar meta table's row-group stats, which IS the trie's
         range-pruning role."""
         if isinstance(query, str):
-            from .parser import parse_query
-
             query = parse_query(query)
         if not hasattr(self.index, "doc_meta"):
             raise ValueError("search_filtered needs a materialized index with doc_meta")
@@ -1100,8 +1040,6 @@ class Searcher:
         joined to the pruned doc_meta projection, then
         TakeOrderedAndProject — one hash join, no extra shuffle."""
         if isinstance(query, str):
-            from .parser import parse_query
-
             query = parse_query(query)
         if not hasattr(self.index, "doc_meta"):
             raise ValueError("function_score needs a materialized index with doc_meta")
@@ -1125,8 +1063,6 @@ class Searcher:
         recomposes them with the mode's arithmetic and equals the
         function_score frame score exactly."""
         if isinstance(query, str):
-            from .parser import parse_query
-
             query = parse_query(query)
         if mode not in ("multiply", "sum"):
             raise ValueError(f"unknown mode {mode!r}")
@@ -1167,8 +1103,6 @@ class Searcher:
         merge, never a full sort.  The relevance score rides along as a
         ``score`` column (trackScores=true)."""
         if isinstance(query, str):
-            from .parser import parse_query
-
             query = parse_query(query)
         if not hasattr(self.index, "doc_meta"):
             raise ValueError("search_sorted needs a materialized index with doc_meta")

@@ -434,12 +434,9 @@ def matching_terms(index, field: str, regex: str, max_terms: int = MAX_CLAUSE_CO
     if structural and path == "full":
         path = "bounded"
     rows = src.filter(F.col("term").rlike(regex)).orderBy("term").limit(max_terms + 1).collect()
-    try:
-        index.last_multiterm_stats = {"path": path, "prefix": prefix,
-                                      "runs": list(runs or []),
-                                      "bounds": bounds, "suffix": suffix}
-    except Exception:
-        pass
+    index.last_multiterm_stats = {"path": path, "prefix": prefix,
+                                  "runs": list(runs or []),
+                                  "bounds": bounds, "suffix": suffix}
     if len(rows) > max_terms:
         raise ValueError(f"maxClauseCount is set to {max_terms}")
     return [r["term"] for r in rows]

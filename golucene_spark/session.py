@@ -6,9 +6,13 @@ minus master/driver-memory (spark-submit provides those).
 
 from __future__ import annotations
 
+import logging
 import os
 
 from pyspark.sql import SparkSession
+
+log = logging.getLogger(__name__)
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 # This sandbox's VM has a very slow first-touch page-fault path; glibc's
 # default 128KB mmap threshold makes every large NumPy temp a fresh
@@ -59,7 +63,12 @@ def get_spark(
         # private RSS per worker (see golucene_spark/daemon.py)
         .config("spark.python.daemon.module", "golucene_spark.daemon")
     )
-    for k, v in (extra_conf or {}).items():
+    # workers import the package (first the daemon module) from its
+    # parent directory, wherever the driver was launched from
+    conf = dict(extra_conf or {})
+    key = "spark.executorEnv.PYTHONPATH"
+    conf[key] = os.pathsep.join(filter(None, [_PACKAGE_PARENT, conf.get(key)]))
+    for k, v in conf.items():
         b = b.config(k, v)
     spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
@@ -104,7 +113,8 @@ def warm_workers(spark: SparkSession, slots: int | None = None) -> float:
     try:
         _warm_jvm(spark)
     except Exception:
-        pass  # warmup is best-effort; never fail the caller
+        # warmup is best-effort; never fail the caller
+        log.warning("JVM warm-up failed; continuing cold", exc_info=True)
     return _time.time() - t0
 
 

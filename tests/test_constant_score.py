@@ -24,7 +24,7 @@ def ix(spark):
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string, lang string, source string")
     return LogicalIndex(df, CorpusSpec.documents(), analyzer="simple",
-                        quantize_norms=False).cache()
+                        quantize_norms=False).persist()
 
 
 def test_bm25_standalone_scores_boost(ix):

@@ -18,7 +18,7 @@ def ix(spark):
         keyword_fields=[FieldSpec("lang", "lang", False)],
         key_cols=["doc_id"], id_col="doc_id", meta_cols=["lang"],
     )
-    return LogicalIndex(df, spec).cache()
+    return LogicalIndex(df, spec).persist()
 
 
 @pytest.mark.parametrize("sim", ["bm25", "classic"])
@@ -101,7 +101,7 @@ def pex(spark):
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string, lang string, source string")
     return LI(df, CorpusSpec.documents(), analyzer="simple",
-              quantize_norms=False, index_positions=True).cache()
+              quantize_norms=False, index_positions=True).persist()
 
 
 @pytest.mark.parametrize("sim", ["bm25", "classic"])

@@ -26,7 +26,7 @@ def nix(spark):
         text_fields=[FieldSpec("body", "body", True)],
         keyword_fields=[], key_cols=["doc_id"], id_col="doc_id", meta_cols=[],
     )
-    return LogicalIndex(df, spec, analyzer="standard", quantize_norms=True).cache()
+    return LogicalIndex(df, spec, analyzer="standard", quantize_norms=True).persist()
 
 
 def _q(s):

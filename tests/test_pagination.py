@@ -16,7 +16,7 @@ def searcher(spark):
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string, lang string, source string")
     ix = LogicalIndex(df, CorpusSpec.documents(), analyzer="simple",
-                      quantize_norms=False).cache()
+                      quantize_norms=False).persist()
     return Searcher(ix, "bm25")
 
 
@@ -165,7 +165,7 @@ def test_pagination_walk_fuzz(spark):
         keyword_fields=[], key_cols=["doc_id"], id_col="doc_id", meta_cols=[],
     )
     ix = LogicalIndex(spark.createDataFrame(pdf), spec, analyzer="simple",
-                      quantize_norms=False).cache()
+                      quantize_norms=False).persist()
     s = Searcher(ix, "bm25")
     cs = CachingSearcher(s)
 

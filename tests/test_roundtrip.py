@@ -37,7 +37,7 @@ def tiny_index(spark):
         [(0, "bar", "go"), (1, "bar bar baz", "py"), (2, "qux", "go")],
         "doc_id long, content string, lang string",
     )
-    return LogicalIndex(df, three_doc_spec(), analyzer="standard", quantize_norms=True).cache()
+    return LogicalIndex(df, three_doc_spec(), analyzer="standard", quantize_norms=True).persist()
 
 
 def test_term_query_bm25_hand_computed(tiny_index):
@@ -145,7 +145,7 @@ def corpus_pair(spark):
         id_col="doc_id",
         meta_cols=["repo", "path", "lang"],
     )
-    ix = LogicalIndex(df, spec, analyzer="standard", quantize_norms=True).cache()
+    ix = LogicalIndex(df, spec, analyzer="standard", quantize_norms=True).persist()
     oracle = OracleIndex(
         list(zip(pdf["doc_id"], pdf["content"])),
         analyzer="standard",
