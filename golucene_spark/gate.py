@@ -1896,8 +1896,9 @@ ORDER BY score_e6 DESC, doc_id ASC LIMIT 10
 # ("term|<(i%7)+1>", the DelimitedPayloadTokenFilter convention) through
 # the whitespace analyzer and scores PayloadTermQuery-style:
 # BM25(term) * avg(payload per occurrence).  Payload values are small
-# ints (exact in float32 and in any summation order), so the JVM-side
-# IEEE-754 blob decode and the fold are hash-exact against the twin.
+# ints (exact in float32 and in any summation order), so the
+# array<float> -> array<double> cast and the fold are hash-exact
+# against the twin.
 
 
 def q_payload_term_bm25(spark, sf_dir):
@@ -3195,8 +3196,8 @@ ORDER BY event_type, win_start
 
 def q_span_first_bm25(spark, sf_dir):
     """SpanFirstQuery: text:data within the first 10 token positions,
-    freq = qualifying positions only; positions decode JVM-side
-    (hex/conv in codegen) — no Python in the scorer."""
+    freq = qualifying positions only, filtered over the array<int>
+    positions column — no Python in the scorer."""
     from .search.phrase import span_first_search
 
     s = Searcher(_index_pos(spark, sf_dir), "bm25")
@@ -4646,9 +4647,7 @@ def q_term_vectors(spark, sf_dir):
     ).build(_docs(spark, sf_dir), ixdir)
     ix = MaterializedIndex(spark, ixdir)
     tv = ix.term_vectors_frame(field="text", doc_ids=list(TV_DOC_IDS))
-    from .search.phrase import positions_array_col
-
-    decode = F.transform(positions_array_col(), lambda x: x.cast("string"))
+    decode = F.transform("positions", lambda x: x.cast("string"))
     return (
         tv.select(
             "doc_id",

@@ -63,17 +63,17 @@ TF_SCHEMA = T.StructType(
         T.StructField("field", T.StringType(), False),
         T.StructField("term", T.StringType(), True),
         T.StructField("freq", T.IntegerType(), False),
-        T.StructField("positions", T.BinaryType(), True),
+        T.StructField("positions", T.ArrayType(T.IntegerType()), True),
         T.StructField("dlq", T.DoubleType(), False),
         T.StructField("norm_byte", T.IntegerType(), False),
     ]
 )
 
 # payload-carrying variant: only specs with a FieldSpec(payloads=True)
-# pay for the extra per-posting blob column
+# pay for the extra per-posting payloads column
 TF_SCHEMA_PAYLOADS = T.StructType(
     TF_SCHEMA.fields[:6]
-    + [T.StructField("payloads", T.BinaryType(), True)]
+    + [T.StructField("payloads", T.ArrayType(T.FloatType()), True)]
     + TF_SCHEMA.fields[6:]
 )
 
@@ -90,8 +90,8 @@ class FieldSpec:
     codec/perfield/); here each field carries its own options and the
     inversion stage dispatches on them.
 
-    ``positions=False``: DOCS_AND_FREQS only — position blobs are
-    omitted for this field (phrase queries need positions).
+    ``positions=False``: DOCS_AND_FREQS only — the positions column
+    is null for this field (phrase queries need positions).
     ``omit_norms=True``: no length normalization — norms encode 1.0
     and the field's collection sum_ttf reads as 0, so BM25 degrades to
     idf*(k1+1)*freq/(freq+k1) and classic to norm(1), exactly the
@@ -119,8 +119,8 @@ class FieldSpec:
     # payload bytes into the prox stream).  With payloads=True, tokens of
     # the form ``term|<float>`` are split DelimitedPayloadTokenFilter-
     # style ('|' delimiter, float encoder; bare tokens get 1.0) and the
-    # per-occurrence float32 payloads are stored packed alongside the
-    # positions blob.  Requires positions indexing (prox-stream data)
+    # per-occurrence payloads are stored as an array<float> column
+    # parallel to ``positions``.  Requires positions indexing (prox-stream data)
     # AND the ``whitespace`` analyzer for this field: every other
     # analyzer tokenizes '|' away (the delimiter would be destroyed
     # BEFORE the payload split, silently indexing junk numeric terms
@@ -216,6 +216,8 @@ def _tf_arrow_fn(spec: CorpusSpec, analyzer_name: str, quantize: bool, index_pos
     ]
     kw_fields = [(f.name, f.column) for f in spec.keyword_fields]
     has_payloads = _spec_has_payloads(spec)
+    pos_type = pa.list_(pa.int32())
+    pay_type = pa.list_(pa.float32())
     pa_schema = pa.schema(
         [
             ("segment_id", pa.int32()),
@@ -223,9 +225,9 @@ def _tf_arrow_fn(spec: CorpusSpec, analyzer_name: str, quantize: bool, index_pos
             ("field", pa.string()),
             ("term", pa.string()),
             ("freq", pa.int32()),
-            ("positions", pa.binary()),
+            ("positions", pos_type),
         ]
-        + ([("payloads", pa.binary())] if has_payloads else [])
+        + ([("payloads", pay_type)] if has_payloads else [])
         + [
             ("dlq", pa.float64()),
             ("norm_byte", pa.int32()),
@@ -238,7 +240,7 @@ def _tf_arrow_fn(spec: CorpusSpec, analyzer_name: str, quantize: bool, index_pos
         ).cast(pa.string())
 
     def _null_positions(n: int) -> "pa.Array":
-        return pa.nulls(n, pa.binary())
+        return pa.nulls(n, pos_type)
 
     def _mk(seg, doc, field_arr, term_arr, freq, positions, dlq, nb,
             payloads=None):
@@ -252,7 +254,7 @@ def _tf_arrow_fn(spec: CorpusSpec, analyzer_name: str, quantize: bool, index_pos
         ]
         if has_payloads:
             arrays.append(
-                payloads if payloads is not None else _null_positions(len(freq))
+                payloads if payloads is not None else pa.nulls(len(freq), pay_type)
             )
         arrays += [
             pa.array(dlq.astype(np.float64)),
@@ -319,38 +321,30 @@ def _tf_arrow_fn(spec: CorpusSpec, analyzer_name: str, quantize: bool, index_pos
                     g_term = pa.array(uniq, type=pa.string()).take(
                         pa.array(codes[order][b0].astype(np.int64))
                     )
+                    # one list per posting, sliced out of the sorted
+                    # token order at the group boundaries b0: positions
+                    # as array<int>, payloads (same order) as
+                    # array<float>; Parquet encodes both natively
+                    offsets = pa.array(np.append(b0, len(sk)).astype(np.int32))
                     if index_positions and f_positions:
-                        # packed little-endian int32 per posting (the
-                        # delta-varint byte-slice idea of W4, zero-copy
-                        # via Arrow binary offsets); decode with
-                        # np.frombuffer(buf, '<i4')
-                        pos_bytes = pos[order].astype("<i4").tobytes()
-                        offsets = (np.concatenate((b0, [len(sk)])) * 4).astype(np.int32)
-                        positions = pa.Array.from_buffers(
-                            pa.binary(), len(b0),
-                            [None, pa.py_buffer(offsets.tobytes()), pa.py_buffer(pos_bytes)],
+                        positions = pa.ListArray.from_arrays(
+                            offsets, pa.array(pos[order].astype(np.int32))
                         )
                     else:
                         positions = _null_positions(len(b0))
                     if pay is not None:
-                        # packed float32 per posting, same grouping/order
-                        # as the positions blob (prox-stream layout)
-                        pay_bytes = pay[order].astype("<f4").tobytes()
-                        pay_offsets = (np.concatenate((b0, [len(sk)])) * 4).astype(np.int32)
-                        pay_blob = pa.Array.from_buffers(
-                            pa.binary(), len(b0),
-                            [None, pa.py_buffer(pay_offsets.tobytes()),
-                             pa.py_buffer(pay_bytes)],
+                        pay_list = pa.ListArray.from_arrays(
+                            offsets, pa.array(pay[order])
                         )
                     else:
-                        pay_blob = None
+                        pay_list = None
                     dl = np.bincount(rows, minlength=n).astype(np.int64)
                 else:
                     g_row = np.array([], dtype=np.int64)
                     g_term = pa.array([], type=pa.string())
                     freq = np.array([], dtype=np.int32)
                     positions = _null_positions(0)
-                    pay_blob = None
+                    pay_list = None
                     dl = np.zeros(n, dtype=np.int64)
                 if f_omit_norms:
                     # omitNorms: every doc's norm encodes 1.0; scoring
@@ -377,7 +371,7 @@ def _tf_arrow_fn(spec: CorpusSpec, analyzer_name: str, quantize: bool, index_pos
                     yield _mk(
                         seg_ids[g_row], doc_ids[g_row], _const_str(fname, len(g_row)),
                         g_term, freq, positions, dlq_doc[g_row], nb[g_row],
-                        pay_blob,
+                        pay_list,
                     )
                 # sentinel doc rows: term = sha256(text), freq = doc length
                 shas = pa.array(
@@ -1324,19 +1318,15 @@ class MaterializedIndex:
 
     def term_vector(self, doc_id: int, field: str | None = None) -> list[dict]:
         """getTermVector(docID[, field]) (IndexReader role): the doc's
-        terms with freq and decoded positions, sorted by (field, term)
+        terms with freq and positions, sorted by (field, term)
         — TermsEnum order.  Deleted docs return []."""
-        import numpy as np
-
         rows = self.term_vectors_frame(field=field, doc_ids=[doc_id]).collect()
         out = [
             {
                 "field": r["field"],
                 "term": r["term"],
                 "freq": int(r["freq"]),
-                "positions": []
-                if r["positions"] is None
-                else np.frombuffer(r["positions"], "<i4").tolist(),
+                "positions": r["positions"] or [],
             }
             for r in rows
         ]

@@ -343,7 +343,7 @@ def _merge_expunge(spark, index_dir, segment_ids, new_segment_id, out_chunk,
     ``scoped_only``: apply only segment-scoped (updateDocument) tombstones
     — the plain-merge path uses this to drop superseded versions before
     relabeling, while plain deletes remain logical (read-time filtered)."""
-    from .builder import TF_SCHEMA, blocked_postings
+    from .builder import blocked_postings
     from .deletes import tombstones
 
     t0 = time.time()
@@ -355,9 +355,7 @@ def _merge_expunge(spark, index_dir, segment_ids, new_segment_id, out_chunk,
     post = spark.read.option("mergeSchema", "true").parquet(os.path.join(index_dir, "postings")).filter(
         F.col("segment_id").isin(segment_ids)
     )
-    zcols = ["doc_ids", "freqs", "dlqs", "norm_bytes"]
-    if "positions" in post.columns:
-        zcols.append("positions")
+    zcols = ["doc_ids", "freqs", "dlqs", "norm_bytes", "positions"]
     if "payloads" in post.columns:
         zcols.append("payloads")
     # NOTE: a payloads column is emitted ONLY when the source postings
@@ -372,7 +370,7 @@ def _merge_expunge(spark, index_dir, segment_ids, new_segment_id, out_chunk,
         "field",
         "term",
         F.col("e.freqs").alias("freq"),
-        (F.col("e.positions") if "positions" in zcols else F.lit(None).cast("binary")).alias("positions"),
+        F.col("e.positions").alias("positions"),
         *( [F.col("e.payloads").alias("payloads")] if "payloads" in zcols else [] ),
         F.col("e.dlqs").alias("dlq"),
         F.col("e.norm_bytes").alias("norm_byte"),

@@ -28,7 +28,7 @@ class MultiIndex:
         self.indexes = list(indexes)
         self.stride = doc_base_stride
         self.spark = indexes[0].spark
-        quant = {getattr(ix, "quantized", True) for ix in indexes}
+        quant = {ix.quantized for ix in indexes}
         assert len(quant) == 1, "sub-indexes disagree on norm quantization"
         self.quantized = quant.pop()
         self.cache = SnapshotCache()

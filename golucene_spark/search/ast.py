@@ -252,7 +252,7 @@ def _boosted(q, boost: float):
         return PhraseQuery(q.field, q.terms, q.boost * boost, q.slop, q.in_order)
     if isinstance(q, FuzzyQuery):
         return FuzzyQuery(q.field, q.term, q.max_edits, q.boost * boost,
-                          getattr(q, 'prefix_length', 0))
+                          q.prefix_length)
     if isinstance(q, WildcardQuery):
         return WildcardQuery(q.field, q.pattern, q.boost * boost)
     if isinstance(q, RegexpQuery):

@@ -262,7 +262,7 @@ class Searcher:
         idf = self._term_scalar(st, cs)
         avgdl = self.sim.avgdl(cs["sum_ttf"], cs["max_doc"])
         p = self.index.postings_for_terms(q.field, [q.term])
-        norm_col = F.col("norm_byte") if getattr(self.index, "quantized", True) else None
+        norm_col = F.col("norm_byte") if self.index.quantized else None
         kwargs = {}
         if self.sim.uses_coord:  # classic folds queryNorm into the weight
             kwargs["query_norm"] = query_norm
@@ -299,8 +299,8 @@ class Searcher:
         idf = sum(self.sim.idf(stats[(q.field, t)].df, cs["max_doc"]) for t in q.terms)
         avgdl = self.sim.avgdl(cs["sum_ttf"], cs["max_doc"])
         frame = phrase_freq_frame(self.index, q.field, list(q.terms), q.slop,
-                                  in_order=getattr(q, 'in_order', False))
-        norm_col = F.col("norm_byte") if getattr(self.index, "quantized", True) else None
+                                  in_order=q.in_order)
+        norm_col = F.col("norm_byte") if self.index.quantized else None
         kwargs = {"query_norm": query_norm} if self.sim.uses_coord else {}
         score = self.sim.score_col(
             F.col("freq").cast("double"), F.col("dlq"), norm_col,
@@ -331,9 +331,9 @@ class Searcher:
         avgdl = self.sim.avgdl(cs["sum_ttf"], cs["max_doc"])
         frame = multi_phrase_freq_frame(
             self.index, q.field, live_sets, q.slop,
-            in_order=getattr(q, "in_order", False),
+            in_order=q.in_order,
         )
-        norm_col = F.col("norm_byte") if getattr(self.index, "quantized", True) else None
+        norm_col = F.col("norm_byte") if self.index.quantized else None
         kwargs = {"query_norm": query_norm} if self.sim.uses_coord else {}
         score = self.sim.score_col(
             F.col("freq").cast("double"), F.col("dlq"), norm_col,
@@ -404,7 +404,7 @@ class Searcher:
                 lambda: expand_wildcard(self.index, q.field, q.pattern, q.boost),
             )
         if isinstance(q, FuzzyQuery):
-            pl = getattr(q, "prefix_length", 0)
+            pl = q.prefix_length
             return expand(
                 ("expand", "f", q.field, q.term, q.max_edits, q.boost, pl),
                 lambda: expand_fuzzy(self.index, q.field, q.term, q.max_edits,
@@ -464,7 +464,7 @@ class Searcher:
             F.create_map(*[x for k, v in m.items() for x in (F.lit(k), F.lit(v))]),
             F.col("term"),
         ).cast(t)
-        norm_col = F.col("norm_byte") if getattr(self.index, "quantized", True) else None
+        norm_col = F.col("norm_byte") if self.index.quantized else None
         kwargs = {"query_norm": query_norm} if self.sim.uses_coord else {}
         uniform_boost = len(set(boost_map.values())) == 1
         score = self.sim.score_col(
@@ -520,7 +520,7 @@ class Searcher:
         cs = self._collection_stats(q.field)
         idf = self._term_scalar(st, cs)
         avgdl = self.sim.avgdl(cs["sum_ttf"], cs["max_doc"])
-        nb = np.array([124]) if getattr(self.index, "quantized", True) else None
+        nb = np.array([124]) if self.index.quantized else None
         kwargs = {"query_norm": query_norm} if self.sim.uses_coord else {}
         return float(self.sim.score_np(
             np.array([1.0]), np.array([1.0]), nb, idf, avgdl, q.boost, **kwargs
@@ -782,7 +782,7 @@ class Searcher:
                         "description": f"no match on {label} (absent term)"}
             rows = (
                 phrase_freq_frame(self.index, q.field, list(q.terms), q.slop,
-                                  in_order=getattr(q, "in_order", False))
+                                  in_order=q.in_order)
                 .filter(F.col("doc_id") == doc_id)
                 .collect()
             )
@@ -797,7 +797,7 @@ class Searcher:
             import numpy as np
 
             norm = (np.array([r["norm_byte"]])
-                    if getattr(self.index, "quantized", True) else None)
+                    if self.index.quantized else None)
             kwargs = {"query_norm": query_norm} if self.sim.uses_coord else {}
             value = float(self.sim.score_np(
                 np.array([float(r["freq"])]), np.array([r["dlq"]]),
@@ -829,7 +829,7 @@ class Searcher:
             rows = (
                 multi_phrase_freq_frame(
                     self.index, q.field, live_sets, q.slop,
-                    in_order=getattr(q, "in_order", False),
+                    in_order=q.in_order,
                 )
                 .filter(F.col("doc_id") == doc_id)
                 .collect()
@@ -846,7 +846,7 @@ class Searcher:
             import numpy as np
 
             norm = (np.array([r["norm_byte"]])
-                    if getattr(self.index, "quantized", True) else None)
+                    if self.index.quantized else None)
             kwargs = {"query_norm": query_norm} if self.sim.uses_coord else {}
             value = float(self.sim.score_np(
                 np.array([float(r["freq"])]), np.array([r["dlq"]]),

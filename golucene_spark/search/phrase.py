@@ -7,32 +7,36 @@ term_i occurs at p+i for all i; the doc is scored by the query's
 similarity with freq=phraseFreq and idf = sum of the terms' idfs
 (Lucene's PhraseWeight sums idfs via Similarity.idfExplain(terms)).
 
-Execution shape: conjunction (inner joins on doc_id — only docs
-containing ALL terms survive) -> one vectorized pandas stage that
-intersects offset-shifted position sets for the WHOLE Arrow batch at
-once: per-doc position arrays are flattened into a single int64 array
-keyed by (row_index << 32) + (position - term_offset), so one
-np.intersect1d per query term replaces any per-doc Python loop.
+Positions are stored as a native ``array<int>`` postings column (and
+payloads as ``array<float>``), so every reader uses the column as it is.
+
+Execution shape: one term-pruned scan + groupBy(doc_id) pivots each
+doc's postings into one positions column per query slot (only docs
+containing ALL terms survive).  Exact phrases then match in Catalyst:
+array_intersect over the offset-shifted position arrays.  Sloppy
+phrases run one vectorized Arrow stage over the WHOLE batch: each
+slot's list column is flattened into an int64 array keyed by
+(row_index << 32) + (position - term_offset), so no per-doc Python
+loop runs.
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 
 from pyspark.sql import DataFrame, functions as F, types as T
 
 from .ast import PhraseQuery
 
 
-def _flat_rows_adj(col, term_offset: int, n_rows: int):
-    """Column of packed little-endian int32 position blobs ->
-    (rows, adjusted positions) int64 arrays, one frombuffer over the
-    concatenated blobs — no per-position Python work."""
-    bufs = [bytes(b) if b is not None else b"" for b in col]
-    lens = np.fromiter((len(b) >> 2 for b in bufs), dtype=np.int64, count=n_rows)
-    flat = np.frombuffer(b"".join(bufs), dtype="<i4").astype(np.int64)
-    rows = np.repeat(np.arange(n_rows, dtype=np.int64), lens)
+def _flat_rows_adj(col, term_offset: int):
+    """array<int> position column of one Arrow batch -> (rows, adjusted
+    positions) int64 arrays, one list_flatten — no per-row work."""
+    lens = pc.fill_null(pc.list_value_length(col), 0).to_numpy()
+    flat = pc.list_flatten(col).to_numpy().astype(np.int64)
+    rows = np.repeat(np.arange(len(col), dtype=np.int64), lens)
     return rows, flat - term_offset
 
 
@@ -140,7 +144,7 @@ def phrase_freq_frame(index, field: str, terms: list[str], slop: int = 0,
 
 
 def _conjunction_base(index, field: str, terms: list[str]):
-    """Docs containing ALL terms, with one position-blob column per
+    """Docs containing ALL terms, with one positions column per
     query slot.  ONE term-pruned scan (In(term, ...) pushdown) + ONE
     partial-agg groupBy — not n scans and n-1 shuffle joins: the doc has
     exactly one live postings row per term, so pivoting the rows into a
@@ -175,8 +179,8 @@ def _conjunction_base(index, field: str, terms: list[str]):
 def _multi_conjunction_base(index, field: str, term_sets):
     """MultiPhraseQuery conjunction: slot i matches a doc when ANY of
     its terms occurs — per-slot union of the terms' postings with the
-    doc's matching position blobs CONCATENATED (packed order is
-    irrelevant, the matcher sorts).  Same single-scan shape as
+    doc's matching position arrays concatenated (order is irrelevant,
+    the matcher sorts).  Same single-scan shape as
     _conjunction_base: one In(term,...) pruned scan, one groupBy; the
     per-slot union folds the collected (term, positions) rows filtered
     through a term->slot map literal."""
@@ -197,22 +201,24 @@ def _multi_conjunction_base(index, field: str, term_sets):
         F.first("dlq").alias("dlq"),
         F.first("norm_byte").alias("norm_byte"),
     )
-    def slot_blob(i):
+    empty = F.array().cast("array<int>")
+
+    def slot_positions(i):
         return F.aggregate(
             F.filter(F.col("_rows"), lambda r: F.array_contains(r["slots"], i)),
-            F.lit(b"").cast("binary"),
-            lambda a, r: F.concat(a, F.coalesce(r["positions"], F.lit(b""))),
+            empty,
+            lambda a, r: F.concat(a, F.coalesce(r["positions"], empty)),
         )
     out = agg.select(
         "doc_id",
-        *[slot_blob(i).alias(f"pos{i}") for i in range(len(term_sets))],
+        *[slot_positions(i).alias(f"pos{i}") for i in range(len(term_sets))],
         "dlq",
         "norm_byte",
     )
     # conjunction: every slot must have at least one occurrence
     cond = None
     for i in range(len(term_sets)):
-        c = F.length(F.col(f"pos{i}")) > 0
+        c = F.size(F.col(f"pos{i}")) > 0
         cond = c if cond is None else (cond & c)
     return out.filter(cond)
 
@@ -226,7 +232,7 @@ def multi_phrase_freq_frame(index, field: str, term_sets, slop: int = 0,
     n = len(term_sets)
     if slop or in_order:
         return _sloppy_from_base(base, n, slop, in_order)
-    # slots are UNIONS of term position blobs: two terms of one slot may
+    # slots are UNIONS of term position arrays: two terms of one slot may
     # occupy the same position (e.g. a shingle and its first unigram), so
     # keys within a slot are not unique — array_intersect's distinct
     # semantics in _exact_from_base dedupe them by construction.
@@ -252,23 +258,20 @@ def _sloppy_from_base(base, n: int, slop: int,
     )
 
     def compute(batches):
-        for pdf in batches:
-            m = len(pdf)
+        for rb in batches:
+            m = rb.num_rows
             if m == 0:
                 continue
-            flats = [_flat_rows_adj(pdf[f"pos{i}"], i, m) for i in range(n)]
+            flats = [_flat_rows_adj(rb.column(f"pos{i}"), i) for i in range(n)]
             freqs = _batch_sloppy_freqs(flats, m, slop, in_order)
-            out = pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "freq": freqs,
-                    "dlq": pdf["dlq"],
-                    "norm_byte": pdf["norm_byte"],
-                }
+            out = pa.RecordBatch.from_arrays(
+                [rb.column("doc_id"), pa.array(freqs),
+                 rb.column("dlq"), rb.column("norm_byte")],
+                names=schema.names,
             )
-            yield out[out["freq"] > 0]
+            yield out.filter(pa.array(freqs > 0))
 
-    return base.mapInPandas(compute, schema)
+    return base.mapInArrow(compute, schema)
 
 
 def _exact_freq_frame(index, field: str, terms: list[str]) -> DataFrame:
@@ -277,18 +280,18 @@ def _exact_freq_frame(index, field: str, terms: list[str]) -> DataFrame:
 
 
 def _exact_from_base(base, n: int) -> DataFrame:
-    """Exact phrase frequency entirely in whole-stage codegen: decode
-    each slot's packed position blob JVM-side and fold
-    array_intersect over the offset-shifted arrays — freq = number of
+    """Exact phrase frequency entirely in whole-stage codegen: fold
+    array_intersect over each slot's offset-shifted positions array —
+    freq = number of
     distinct start positions p with a slot-i occurrence at p+i for all
     i.  No Python worker round-trip (the former mapInPandas stage cost
     more in Arrow transfer + worker scheduling than the whole match).
     array_intersect's distinct semantics also dedupe union slots
     (MultiPhraseQuery: one slot may hold two terms sharing a
     position)."""
-    # slot 0 may be a union blob with duplicate positions; distinct-ify
+    # slot 0 may be a union slot with duplicate positions; distinct-ify
     # (array_intersect dedupes the later slots by itself)
-    inter = F.array_distinct(positions_array_col("pos0"))
+    inter = F.array_distinct(F.col("pos0"))
 
     def _shift(off):
         # NOTE: must be a ONE-parameter lambda — a second parameter
@@ -298,48 +301,13 @@ def _exact_from_base(base, n: int) -> DataFrame:
 
     for i in range(1, n):
         inter = F.array_intersect(
-            inter, F.transform(positions_array_col(f"pos{i}"), _shift(i))
+            inter, F.transform(F.col(f"pos{i}"), _shift(i))
         )
     return (
         base.select(
             "doc_id", F.size(inter).alias("freq"), "dlq", "norm_byte"
         )
         .filter(F.col("freq") > 0)
-    )
-
-
-def positions_array_col(col="positions"):
-    """JVM-side decode of a packed little-endian int32 position blob to
-    array<int> — hex/conv per 4-byte slice inside whole-stage codegen,
-    no Python round-trip."""
-    return F.expr(
-        f"transform(sequence(1, int(length({col}) / 4)), i -> "
-        f"cast(conv(concat(hex(substring({col}, i*4, 1)), "
-        f"hex(substring({col}, i*4-1, 1)), "
-        f"hex(substring({col}, i*4-2, 1)), "
-        f"hex(substring({col}, i*4-3, 1))), 16, 10) as int))"
-    )
-
-
-def payload_floats_col(col="payloads"):
-    """JVM-side decode of a packed little-endian float32 payload blob to
-    array<double> — bit-exact IEEE-754 reassembly inside whole-stage
-    codegen (sign * (1+m/2^23) * 2^(e-127); denormals m/2^23 * 2^-126):
-    every step (dyadic mantissa fraction, integer power of two, sign
-    flip) is exact in double, so the decode matches NumPy's frombuffer
-    to the bit for all finite payloads."""
-    bits = (f"cast(conv(concat(hex(substring({col}, i*4, 1)), "
-            f"hex(substring({col}, i*4-1, 1)), "
-            f"hex(substring({col}, i*4-2, 1)), "
-            f"hex(substring({col}, i*4-3, 1))), 16, 10) as bigint)")
-    return F.expr(
-        f"transform(sequence(1, int(length({col}) / 4)), i -> ("
-        f"case when {bits} % 2147483648 = 0 then cast(0.0 as double) else "
-        f"(case when ({bits} div 2147483648) % 2 = 1 then -1.0 else 1.0 end)"
-        f" * (case when (({bits} div 8388608) % 256) = 0"
-        f" then (cast(({bits} % 8388608) as double) / 8388608.0) * pow(2.0, -126)"
-        f" else (1.0 + cast(({bits} % 8388608) as double) / 8388608.0)"
-        f" * pow(2.0, (({bits} div 8388608) % 256) - 127) end) end))"
     )
 
 
@@ -350,8 +318,9 @@ def payload_term_search(searcher, field: str, term: str, k: int = 10,
     termsHashConsumerPerField.go:268-282 but its payload readers are
     stubbed): score = termScore(doc) * avg(payload) per occurrence
     (includeSpanScore=True), or the average payload alone.  Pure
-    Catalyst: the float32 blob decodes JVM-side (payload_floats_col),
-    the average is a sequential aggregate fold in position order."""
+    Catalyst: the array<float> payloads cast to array<double> (exact,
+    so scores match a float32 decode bit for bit) and the average is a
+    sequential aggregate fold in position order."""
     from .ast import TermQuery
 
     s = searcher
@@ -371,7 +340,7 @@ def payload_term_search(searcher, field: str, term: str, k: int = 10,
             f"index stores no payloads for field {field!r} "
             "(build with FieldSpec(payloads=True))"
         )
-    pf = payload_floats_col()
+    pf = F.col("payloads").cast("array<double>")
     avg_payload = F.coalesce(
         F.aggregate(pf, F.lit(0.0), lambda a, x: a + x)
         / F.size(pf),
@@ -382,7 +351,7 @@ def payload_term_search(searcher, field: str, term: str, k: int = 10,
         if s.sim.uses_coord
         else {}
     )
-    norm_col = F.col("norm_byte") if getattr(s.index, "quantized", True) else None
+    norm_col = F.col("norm_byte") if s.index.quantized else None
     base = s.sim.score_col(
         F.col("freq").cast("double"), F.col("dlq"), norm_col, idf, avgdl, 1.0,
         **kwargs,
@@ -411,8 +380,7 @@ def _span_first_parts(searcher, field: str, term: str, end: int):
     idf = s.sim.idf(st.df, cs["max_doc"])
     avgdl = s.sim.avgdl(cs["sum_ttf"], cs["max_doc"])
     p = s.index.postings_for_terms(field, [term], with_positions=True)
-    pos = positions_array_col()
-    qfreq = F.size(F.filter(pos, lambda x: x < F.lit(end)))
+    qfreq = F.size(F.filter("positions", lambda x: x < F.lit(end)))
     kwargs = (
         {"query_norm": s.sim.query_norm(s._sum_sq(q, stats))}
         if s.sim.uses_coord
@@ -426,9 +394,8 @@ def span_first_search(searcher, field: str, term: str, end: int,
     """SpanFirstQuery (Lucene spans module): the term must occur within
     the first ``end`` positions of the field; the doc is scored by the
     similarity with freq = number of qualifying positions.  Pure
-    Catalyst: positions decode JVM-side (positions_array_col) and the
-    qualifying freq is a size(filter(...)) over the array — no
-    Python."""
+    Catalyst: the qualifying freq is a size(filter(...)) over the
+    array<int> positions column — no Python."""
     parts = _span_first_parts(searcher, field, term, end)
     if parts is None:
         from .executor import empty_results
@@ -436,7 +403,7 @@ def span_first_search(searcher, field: str, term: str, end: int,
         return empty_results(searcher.index.spark)
     frame, idf, avgdl, kwargs = parts
     s = searcher
-    norm_col = F.col("norm_byte") if getattr(s.index, "quantized", True) else None
+    norm_col = F.col("norm_byte") if s.index.quantized else None
     score = s.sim.score_col(
         F.col("_qf").cast("double"), F.col("dlq"), norm_col, idf, avgdl, 1.0,
         **kwargs,
@@ -489,7 +456,7 @@ def span_or_search(searcher, field: str, terms: list[str],
         return empty_results(searcher.index.spark)
     frame, idf, avgdl, kwargs = parts
     s = searcher
-    norm_col = F.col("norm_byte") if getattr(s.index, "quantized", True) else None
+    norm_col = F.col("norm_byte") if s.index.quantized else None
     score = s.sim.score_col(
         F.col("_qf"), F.col("dlq"), norm_col, idf, avgdl, 1.0, **kwargs
     )
@@ -521,13 +488,10 @@ def _span_not_parts(searcher, field: str, include: str, exclude: str,
         "doc_id", F.col("positions").alias("ex_positions")
     )
     joined = inc.join(exc, "doc_id", "left")
-    inc_pos = positions_array_col("positions")
-    ex_pos = F.coalesce(
-        positions_array_col("ex_positions"), F.array().cast("array<int>")
-    )
+    ex_pos = F.coalesce(F.col("ex_positions"), F.array().cast("array<int>"))
     qfreq = F.size(
         F.filter(
-            inc_pos,
+            "positions",
             lambda p: ~F.exists(
                 ex_pos, lambda e: (e >= p - pre) & (e <= p + post)
             ),
@@ -548,7 +512,7 @@ def span_not_search(searcher, field: str, include: str, exclude: str,
     [pos - pre, pos + post]; the doc is scored by the similarity with
     freq = number of qualifying positions and the INCLUDE term's idf
     (SpanNotQuery scores from the include span).  Pure Catalyst: both
-    position blobs decode JVM-side; the qualification test is a nested
+    positions columns are read as they are; the qualification test is a nested
     exists over the (bounded per-doc) exclude positions."""
     parts = _span_not_parts(searcher, field, include, exclude, pre, post)
     if parts is None:
@@ -557,7 +521,7 @@ def span_not_search(searcher, field: str, include: str, exclude: str,
         return empty_results(searcher.index.spark)
     frame, idf, avgdl, kwargs = parts
     s = searcher
-    norm_col = F.col("norm_byte") if getattr(s.index, "quantized", True) else None
+    norm_col = F.col("norm_byte") if s.index.quantized else None
     score = s.sim.score_col(
         F.col("_qf").cast("double"), F.col("dlq"), norm_col, idf, avgdl, 1.0,
         **kwargs,
@@ -587,7 +551,7 @@ def _span_explain(searcher, parts, doc_id: int, description: str) -> dict:
     r = rows[0]
     s = searcher
     norm = (np.array([r["norm_byte"]])
-            if getattr(s.index, "quantized", True) else None)
+            if s.index.quantized else None)
     value = float(s.sim.score_np(
         np.array([float(r["_qf"])]), np.array([r["dlq"]]),
         norm, idf, avgdl, 1.0, **kwargs,

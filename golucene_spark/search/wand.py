@@ -310,7 +310,7 @@ def _wand_fused(searcher, q, k, weights, avgdl, term_blocks, blocks,
 
         flat = filter_live(flat, index._tombstones)
     idf_map = F.create_map(*[x for kk, v in weights.items() for x in (F.lit(kk), F.lit(v))])
-    norm_col = F.col("norm_byte") if getattr(index, "quantized", True) else None
+    norm_col = F.col("norm_byte") if index.quantized else None
     score = searcher.sim.score_col(
         F.col("freq").cast("double"), F.col("dlq"), norm_col,
         F.element_at(idf_map, F.col("term")), avgdl, 1.0,

@@ -8,6 +8,7 @@ from __future__ import annotations
 
 import logging
 import os
+import re
 
 from pyspark.sql import SparkSession
 
@@ -33,12 +34,8 @@ def get_spark(
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
     master = master or os.environ.get("SPARK_GRAFT_MASTER", f"local[{cpus}]")
     if shuffle_partitions is None:
-        n = cpus if master.startswith("local[") and master != "local[*]" else cpus
-        try:
-            n = int(master[len("local["):-1]) if master.startswith("local[") and master[6:-1].isdigit() else cpus
-        except ValueError:
-            n = cpus
-        shuffle_partitions = max(8, n)
+        m = re.fullmatch(r"local\[(\d+)\]", master)
+        shuffle_partitions = max(8, int(m.group(1)) if m else cpus)
 
     b = (
         SparkSession.builder.master(master)

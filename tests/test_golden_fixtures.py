@@ -44,8 +44,7 @@ def _build_index_from_fixture(spark, index_dir, field="content"):
     rows = []
     for term, postings in inverted.items():
         for doc, freq, positions in postings:
-            rows.append((0, doc, field, term, freq,
-                         np.array(positions, dtype="<i4").tobytes(),
+            rows.append((0, doc, field, term, freq, [int(p) for p in positions],
                          dlq[doc], nb[doc]))
     for doc in dl:  # sentinel rows (doc stats)
         rows.append((0, doc, f"__doc__{field}", f"sha-{doc}", dl[doc], None,
@@ -53,7 +52,7 @@ def _build_index_from_fixture(spark, index_dir, field="content"):
     tf_all = spark.createDataFrame(
         rows,
         "segment_id int, doc_id long, field string, term string, freq int, "
-        "positions binary, dlq double, norm_byte int",
+        "positions array<int>, dlq double, norm_byte int",
     )
     spec = CorpusSpec(text_fields=[FieldSpec(field, field, True)],
                       keyword_fields=[], key_cols=["doc_id"], id_col="doc_id",

@@ -1,6 +1,7 @@
 """Position payloads: prox-stream payload bytes
-(termsHashConsumerPerField.go:268-282) re-expressed as packed float32
-blobs parallel to the positions blob, with PayloadTermQuery scoring."""
+(termsHashConsumerPerField.go:268-282) re-expressed as a native
+array<float> column parallel to the array<int> positions column, with
+PayloadTermQuery scoring."""
 
 import numpy as np
 import pytest
@@ -8,7 +9,6 @@ from pyspark.sql import functions as F
 
 from golucene_spark.index import CorpusSpec, FieldSpec, IndexBuilder, LogicalIndex, MaterializedIndex
 from golucene_spark.search import Searcher, payload_term_search
-from golucene_spark.search.phrase import payload_floats_col
 
 
 def _spec():
@@ -35,23 +35,47 @@ def docs(spark):
 def test_payload_blob_roundtrip(spark, docs):
     ix = LogicalIndex(docs, _spec(), analyzer="whitespace", quantize_norms=False)
     rows = ix.postings_for_terms("text", ["alpha"], with_payloads=True).collect()
-    by_doc = {r["doc_id"]: np.frombuffer(r["payloads"], "<f4").tolist() for r in rows}
+    by_doc = {r["doc_id"]: r["payloads"] for r in rows}
     assert by_doc == {0: [2.0, 6.0], 1: [1.5]}
     # bare tokens (no delimiter / unparseable suffix) carry payload 1.0
     rows_g = ix.postings_for_terms("text", ["gamma"], with_payloads=True).collect()
-    assert np.frombuffer(rows_g[0]["payloads"], "<f4").tolist() == [1.0]
+    assert rows_g[0]["payloads"] == [1.0]
 
 
-def test_jvm_float32_decode_bit_exact(spark):
-    """payload_floats_col must reproduce NumPy's float32 decode exactly,
-    including negatives, denormals, and zero."""
+def test_float32_payloads_bit_exact_through_build_and_expunge(spark, tmp_path):
+    """float32 payloads — negatives, denormals and zero included — come
+    back bit-exact from a materialized build and again after an expunge
+    merge, both as stored and through payload scoring's double cast."""
+    from golucene_spark.index.deletes import delete_docs
+    from golucene_spark.index.merge import merge_segments
+
     vals = np.array([0.0, 1.0, -1.0, 0.25, 3.5, 1e-40, -1e-40, 123.456, 7.0],
                     dtype=np.float32)
-    blob = vals.astype("<f4").tobytes()
-    df = spark.createDataFrame([(blob,)], "payloads binary")
-    got = df.select(payload_floats_col().alias("d")).collect()[0]["d"]
-    want = [float(x) for x in vals]
-    assert got == want  # exact, not approx
+    text = " ".join(f"v|{float(x)!r}" for x in vals)
+    df = spark.createDataFrame([(0, text), (1, "v|2.0")], "doc_id long, text string")
+    ixdir = str(tmp_path / "ix")
+    IndexBuilder(spark, _spec(), analyzer="whitespace", quantize_norms=False,
+                 num_segments=1).build(df, ixdir)
+
+    def stored():
+        ix = MaterializedIndex(spark, ixdir)
+        p = ix.postings_for_terms("text", ["v"], with_payloads=True)
+        row = p.filter(F.col("doc_id") == 0).select(
+            "payloads", F.col("payloads").cast("array<double>").alias("d")
+        ).collect()[0]
+        return ix, row["payloads"], row["d"]
+
+    def bits(xs):
+        return np.array(xs, dtype=np.float32).view(np.uint32).tolist()
+
+    ix, got, got_d = stored()
+    assert bits(got) == bits(vals) and bits(got_d) == bits(vals)
+    assert got_d == [float(x) for x in vals]  # exact, not approx
+    delete_docs(spark, ixdir, [1])
+    segs = [r["segment_id"] for r in ix.term_dict.select("segment_id").distinct().collect()]
+    merge_segments(spark, ixdir, segs, expunge_deletes=True)
+    _, got2, got2_d = stored()
+    assert bits(got2) == bits(vals) and got2_d == got_d
 
 
 def test_payload_term_scoring(spark, docs):
@@ -79,7 +103,7 @@ def test_payloads_survive_materialized_build_and_merge(spark, docs, tmp_path):
                  num_segments=2).build(docs, ixdir)
     ix = MaterializedIndex(spark, ixdir)
     rows = ix.postings_for_terms("text", ["alpha"], with_payloads=True).collect()
-    by_doc = {r["doc_id"]: np.frombuffer(r["payloads"], "<f4").tolist() for r in rows}
+    by_doc = {r["doc_id"]: r["payloads"] for r in rows}
     assert by_doc == {0: [2.0, 6.0], 1: [1.5]}
     # expunge-merge re-blocks through the explode path; payloads survive
     from golucene_spark.index.merge import merge_segments
@@ -88,7 +112,7 @@ def test_payloads_survive_materialized_build_and_merge(spark, docs, tmp_path):
     merge_segments(spark, ixdir, segs, expunge_deletes=True)
     ix2 = MaterializedIndex(spark, ixdir)
     rows2 = ix2.postings_for_terms("text", ["alpha"], with_payloads=True).collect()
-    by_doc2 = {r["doc_id"]: np.frombuffer(r["payloads"], "<f4").tolist() for r in rows2}
+    by_doc2 = {r["doc_id"]: r["payloads"] for r in rows2}
     assert by_doc2 == by_doc
 
 
